@@ -17,6 +17,8 @@ package graft
   *   - sub-second noise doesn't trip it: a flagged query must also be at
   *     least [[MinDeltaSec]] slower in absolute seconds, because a 0.05 →
   *     0.12 s scalar query is scheduler jitter, not a plan regression;
+  *   - a query under [[MinBaseSec]] in the committed baseline is exempt
+  *     (printed, not failed) unless it slowed by [[MaxDeltaSec]] or more;
   *   - queries present on only one side are reported, never failed
   *     (inventory growth is normal; a DROPPED query is Verify's job).
   *
@@ -37,6 +39,12 @@ object BenchCompare {
     * (OPTIMIZATION_r15 §1: 250 queries <0.5 s, coreUtil ≤0.05) where ratios
     * measure the scheduler, not the plan. */
   val MinBaseSec = 0.5
+
+  /** Escape hatch from [[MinBaseSec]]: a query that slowed by at least this
+    * many absolute seconds is gate-eligible whatever its committed cost, so
+    * a sub-half-second query that turns into a multi-second one (a real
+    * plan regression, not scheduler jitter) still fails the build. */
+  val MaxDeltaSec = 5.0
 
   final case class Entry(ratio: Double, sec: Double)
   final case class Regression(
@@ -105,20 +113,27 @@ object BenchCompare {
     lines.flatMap(l =>
       if (l.contains("\"bench_meta\"")) field(l, "cpus") else None).headOption
 
-  /** The gate: common queries whose ratio regressed more than `threshold`×
-    * AND slowed by at least `minDeltaSec` absolute seconds AND cost at
-    * least `minBaseSec` in the committed baseline (see [[MinBaseSec]]). */
-  def regressions(old: Map[String, Entry], next: Map[String, Entry],
-      threshold: Double = DefaultThreshold,
-      minDeltaSec: Double = MinDeltaSec,
-      minBaseSec: Double = MinBaseSec): Seq[Regression] =
+  /** Common queries whose ratio regressed more than `threshold`× AND
+    * slowed by at least [[MinDeltaSec]] absolute seconds, split into those
+    * the gate fails (`_1`) and those exempt by the [[MinBaseSec]] floor
+    * (`_2`, printed but never failed). A query is gate-eligible when it
+    * cost at least [[MinBaseSec]] in the committed baseline or slowed by at
+    * least [[MaxDeltaSec]]. */
+  def classify(old: Map[String, Entry], next: Map[String, Entry],
+      threshold: Double = DefaultThreshold): (Seq[Regression], Seq[Regression]) =
     (old.keySet & next.keySet).toSeq.sorted.flatMap { q =>
       val (o, n) = (old(q), next(q))
       if (o.ratio > 0 && n.ratio > o.ratio * threshold &&
-          n.sec - o.sec >= minDeltaSec && o.sec >= minBaseSec)
+          n.sec - o.sec >= MinDeltaSec)
         Some(Regression(q, o.ratio, n.ratio, o.sec, n.sec))
       else None
-    }.sortBy(-_.factor)
+    }.sortBy(-_.factor).partition(r =>
+      r.oldSec >= MinBaseSec || r.newSec - r.oldSec >= MaxDeltaSec)
+
+  /** The gate: the regressions [[classify]] does not exempt. */
+  def regressions(old: Map[String, Entry], next: Map[String, Entry],
+      threshold: Double = DefaultThreshold): Seq[Regression] =
+    classify(old, next, threshold)._1
 
   def main(args: Array[String]): Unit = {
     val threshold =
@@ -129,11 +144,13 @@ object BenchCompare {
     }
     val old = parse(read(args(0)))
     val next = parse(read(args(1)))
-    val regs = regressions(old, next, threshold)
+    val (regs, exempt) = classify(old, next, threshold)
     println(s"compared ${(old.keySet & next.keySet).size} queries " +
       s"(old=${old.size}, new=${next.size}, threshold=${threshold}x, " +
-      s"minDelta=${MinDeltaSec}s)")
+      s"minDelta=${MinDeltaSec}s, minBase=${MinBaseSec}s, " +
+      s"maxDelta=${MaxDeltaSec}s)")
     regs.foreach(r => println(s"  REGRESSION $r"))
+    exempt.foreach(r => println(s"  below floor, not gated: $r"))
     if (regs.isEmpty) println("  no query regressed past the gate")
     if (regs.nonEmpty) sys.exit(1)
   }

@@ -149,7 +149,8 @@ object ScalingCurve {
       if (java.nio.file.Files.exists(marker)) return dir.toString
       java.nio.file.Files.createDirectories(dir)
       Tables.names.foreach { t =>
-        val src = spark.read.parquet(s"$baseDir/$t.parquet")
+        val src = spark.read.schema(Tables.schema(spark, baseDir, t))
+          .parquet(s"$baseDir/$t.parquet")
         writeSingle(stretch(src, spark, t, f), dir, t)
         System.err.println(s"[scaling] built x$f/$t")
       }

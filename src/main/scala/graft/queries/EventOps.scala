@@ -104,6 +104,13 @@ object EventOps {
     f(ss)
   }
 
+  /** Streaming scan of one corpus table, bound to its cataloged schema
+    * ([[Tables.schema]]). The streaming file source wants a directory: it
+    * lists the sf dir and glob-filters down to the table's single file. */
+  private def tableStream(ss: SparkSession, d: String, t: String): DataFrame =
+    ss.readStream.schema(Tables.schema(ss, d, t))
+      .option("pathGlobFilter", s"$t.parquet").parquet(d)
+
   /** Typed rows for q77's Dataset path (Encoders need stable classes). */
   final case class SessEvent(user_id: Long, event_id: Long, us: Long,
                              value: Double)
@@ -172,12 +179,7 @@ object EventOps {
     // from stop() interrupting an in-flight no-op microbatch). In production
     // this is writeStream.trigger(...).toTable with the identical plan.
     "q74_stream_hourly" -> ((s, d) => withStreamSession(s, 8) { ss =>
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
-      // The streaming file source wants a directory: list the sf dir but
-      // glob-filter down to the single events file.
-      val stream = ss.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d)
+      val stream = tableStream(ss, d, "events")
         .transform(Tables.normalizeEventsTs)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -307,10 +309,8 @@ object EventOps {
     // First-seen row is arrival-order-dependent; the (user_id, event_type)
     // SET is not — so the rollup is deterministic and oracle-checkable.
     "q76_stream_dedup" -> ((s, d) => withStreamSession(s, 8) { ss =>
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
       val name = "graft_stream_dedup"
-      val q = ss.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
+      val q = tableStream(ss, d, "events")
         .transform(Tables.normalizeEventsTs)
         .select(col("user_id"), col("event_type"), col("ts"))
         .withWatermark("ts", "200 days")
@@ -387,10 +387,8 @@ object EventOps {
     // how AvailableNow splits the backlog.
     "q78_stream_state" -> ((s, d) => withStreamSession(s, 8) { ss =>
       import ss.implicits._
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
       val name = "graft_stream_state"
-      val counts = ss.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
+      val counts = tableStream(ss, d, "events")
         .transform(Tables.normalizeEventsTs)
         .withWatermark("ts", "1 hour")
         .select(col("user_id"), col("ts"))
@@ -452,10 +450,8 @@ object EventOps {
         .groupBy("user_id").agg(sum("value").as("spent"))
         .filter(col("spent") > 500)
         .select("user_id")
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
       val name = "graft_stream_static"
-      val q = ss.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
+      val q = tableStream(ss, d, "events")
         .select(col("user_id"), col("event_type"))
         .join(broadcast(bigSpenders), "user_id")
         .groupBy("event_type").agg(count(lit(1)).as("n"))
@@ -488,10 +484,8 @@ object EventOps {
         val docs = graft.Tables.ld(ss, d, "documents")
         val seen = docs.filter(col("doc_id") % 5 =!= 0)
           .select(md5(col("text")).as("fp"))
-        val rawSchema = ss.read.parquet(s"$d/documents.parquet").schema
         val name = "graft_stream_incr_dedup"
-        val q = ss.readStream.schema(rawSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(d)
+        val q = tableStream(ss, d, "documents")
           .filter(col("doc_id") % 5 === 0)
           .withColumn("fp", md5(col("text")))
           // shuffle_hash: the seen-set is the whole historical corpus at
@@ -538,10 +532,8 @@ object EventOps {
             s"stack(8, ${(0 until 8).map(j =>
               s"$j, cast(shiftright(snap64, ${8 * j}) & 255 as int)")
               .mkString(", ")}) AS (band_idx, band_val)")
-        val rawSchema = ss.read.parquet(s"$d/documents.parquet").schema
         val name = "graft_stream_neardup"
-        val q = ss.readStream.schema(rawSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(d)
+        val q = tableStream(ss, d, "documents")
           .filter(col("doc_id") % 5 === 0)
           .withColumn("new64",
             graft.functions.TextExprs.simhash64(col("text")))
@@ -579,9 +571,7 @@ object EventOps {
     // stays on the watermarked TIMESTAMP columns (required for state
     // eviction analysis); the oracle mirrors it in epoch_us arithmetic.
     "q85_stream_stream_join" -> ((s, d) => withStreamSession(s, 4) { ss =>
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
-      def src = ss.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
+      def src = tableStream(ss, d, "events")
         .transform(Tables.normalizeEventsTs)
       val purchases = src.filter(col("event_type") === "purchase")
         .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
@@ -800,10 +790,8 @@ object EventOps {
     // every stateful demo here.
     "q186_transform_with_state" -> ((s, d) => withStreamSession(s, 8) { ss =>
       import ss.implicits._
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
       val name = "graft_tws"
-      val q = ss.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
+      val q = tableStream(ss, d, "events")
         .select(col("user_id"), col("event_id"))
         .as[(Long, Long)]
         .groupByKey(_._1)
@@ -957,10 +945,8 @@ object EventOps {
     // reorder float addition, integer cents don't care — the q74 stance.
     "q205_stream_session_window" -> ((s, d) =>
       withStreamSession(s, 8) { ss =>
-        val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
         val name = "graft_stream_sessw"
-        val q = ss.readStream.schema(rawSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(d)
+        val q = tableStream(ss, d, "events")
           .transform(graft.Tables.normalizeEventsTs)
           .groupBy(session_window(col("ts"), "30 minutes").as("sw"),
             col("user_id"))
@@ -1634,14 +1620,11 @@ object EventOps {
     "q281_stream_foreachbatch" -> ((s, d) => withStreamSession(s, 8) {
       ss =>
       import scala.jdk.CollectionConverters._
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
       val merged = new java.util.concurrent.ConcurrentHashMap[
         java.lang.Long, Map[String, Long]]()
       val naive = java.util.Collections.synchronizedList(
         new java.util.ArrayList[(String, Long)]())
-      val q = ss.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d)
+      val q = tableStream(ss, d, "events")
         .transform(Tables.normalizeEventsTs)
         .writeStream
         .foreachBatch { (df: org.apache.spark.sql.Dataset[
@@ -2487,13 +2470,10 @@ object EventOps {
     "q304_stream_dead_letter" -> ((s, d) => withStreamSession(s, 8) {
       ss =>
       import scala.jdk.CollectionConverters._
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
       // (batchId, lane) -> per-type (n, ksum); MERGE semantics per slot
       val store = new java.util.concurrent.ConcurrentHashMap[
         (Long, String), Map[String, (Long, Long)]]()
-      val q = ss.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d)
+      val q = tableStream(ss, d, "events")
         .transform(Tables.normalizeEventsTs)
         .writeStream
         .foreachBatch { (df: org.apache.spark.sql.Dataset[

@@ -765,7 +765,7 @@ object TextOps {
       // item 4). Two changes, output bit-identical (oracle replays the
       // same chained CTEs):
       //
-      // 1. The winning pair comes to the DRIVER as one 1-row head() per
+      // 1. The winning pair comes to the DRIVER as one 1-row take(1) per
       //    round — the same driver-steers-the-loop pattern as the CC
       //    loop's observed convergence metric (a merge table is
       //    driver-resident in every real BPE trainer). This kills the
@@ -793,20 +793,24 @@ object TextOps {
       //    100 TB invariant: vocab-sized, not corpus-sized) and replaces
       //    per-round corpus-wide exchanges — the q127 trade, measured.
       val merged = Seq.newBuilder[(Int, String, String, Long)]
-      for (k <- 1 to K) {
-        // 1-row argmax, deterministic total order (cnt desc, then the
-        // pair itself — (a,b) is unique post-group)
-        val bestRow = vocab
-          .select(col("freq"), col("syms"),
-            posexplode(col("syms")).as(Seq("p", "s")))
-          .withColumn("nxt", get(col("syms"), col("p") + 1))
-          .filter(col("nxt").isNotNull)
-          .groupBy(col("s").as("a"), col("nxt").as("b"))
-          .agg(sum("freq").as("cnt"))
-          .orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
-          .head()
-        val (ba, bb, bc) =
-          (bestRow.getString(0), bestRow.getString(1), bestRow.getLong(2))
+      // 1-row argmax, deterministic total order (cnt desc, then the pair
+      // itself — (a,b) is unique post-group). None once no word has an
+      // adjacent pair left (every word merged to one symbol): training
+      // then ends early and the merge table is the rounds so far.
+      def argmax(v: DataFrame): Option[(String, String, Long)] = v
+        .select(col("freq"), col("syms"),
+          posexplode(col("syms")).as(Seq("p", "s")))
+        .withColumn("nxt", get(col("syms"), col("p") + 1))
+        .filter(col("nxt").isNotNull)
+        .groupBy(col("s").as("a"), col("nxt").as("b"))
+        .agg(sum("freq").as("cnt"))
+        .orderBy(col("cnt").desc, col("a"), col("b"))
+        .take(1).headOption
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      var k = 1
+      var best = argmax(vocab)
+      while (best.isDefined) {
+        val (ba, bb, bc) = best.get
         merged += ((k, ba, bb, bc))
         // greedy left-to-right merge of (ba, bb): one pass over syms.
         // acc = (res: rewritten prefix, skip: next symbol already
@@ -830,6 +834,8 @@ object TextOps {
           acc => acc("res"))
         vocab = vocab.select(col("w"), col("freq"), newSyms.as("syms"))
           .localCheckpoint()
+        k += 1
+        best = if (k <= K) argmax(vocab) else None
       }
       import s.implicits._
       merged.result()

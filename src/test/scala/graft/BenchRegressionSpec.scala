@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    AND it covers a meaningful slice of the inventory, every common
   *    query is compared against the newest committed
   *    `BENCH_DETAIL_r*_local.jsonl`; any >2× ratio regression that also
-  *    slowed ≥0.3 s absolute fails the build. With no fresh detail the
+  *    slowed ≥0.3 s absolute fails the build, if the query cost ≥0.5 s
+  *    in the committed detail or slowed ≥5 s. With no fresh detail the
   *    gate cancels (visible as canceled, never silently green) — it
   *    activates on exactly the runs that can regress.
   */
@@ -94,6 +95,33 @@ class BenchRegressionSpec extends AnyFunSuite {
     assert(BenchCompare.regressions(old2, next2).map(_.query) == Seq("q_real"))
   }
 
+  test("a sub-floor query that slowed by 5 s or more fails the gate") {
+    // The MinBaseSec floor must not shield a real regression: 0.13 -> 60 s
+    // is a plan that broke, not scheduler jitter.
+    val old = BenchCompare.parse(Seq(line("q_tiny", 0.13, 0.26)))
+    val next = BenchCompare.parse(Seq(line("q_tiny", 60.0, 120.0)))
+    assert(BenchCompare.regressions(old, next).map(_.query) == Seq("q_tiny"))
+  }
+
+  test("a sub-floor move below the absolute hatch is listed, not gated") {
+    // r15's q219 case: 0.13 -> 0.61 s stays exempt, and classify still
+    // reports it so the comparer can print it.
+    val old = BenchCompare.parse(Seq(line("q219_tiny", 0.13, 0.26)))
+    val next = BenchCompare.parse(Seq(line("q219_tiny", 0.61, 1.22)))
+    val (gated, exempt) = BenchCompare.classify(old, next)
+    assert(gated.isEmpty)
+    assert(exempt.map(_.query) == Seq("q219_tiny"))
+  }
+
+  test("a subset bench run writes no cpus-keyed mirror") {
+    // A SPARK_GRAFT_BENCH_ONLY spot run must not truncate the mirror a
+    // full run left at the same core count.
+    assert(Bench.mirrorPath("target/bench_detail.jsonl", "8", subset = true)
+      .isEmpty)
+    assert(Bench.mirrorPath("target/bench_detail.jsonl", "8", subset = false)
+      .contains("target/bench_detail_c8.jsonl"))
+  }
+
   test("metaCpus reads the bench_meta header; absent pre-r15 means 32") {
     val lines = Seq(
       """{"bench_meta":{"sf":"/root/testdata/sf0.1","iters":3,"cpus":8}}""",
@@ -153,7 +181,8 @@ class BenchRegressionSpec extends AnyFunSuite {
     assume((old.keySet & next.keySet).size >= 25,
       s"fresh detail covers ${(old.keySet & next.keySet).size} common " +
         "queries (<25) — spot bench, gate not meaningful")
-    val regs = BenchCompare.regressions(old, next)
+    val (regs, exempt) = BenchCompare.classify(old, next)
+    exempt.foreach(r => info(s"below floor, not gated: $r"))
     assert(regs.isEmpty,
       s"bench regression vs ${committed.get.getName}:\n  " +
         regs.mkString("\n  "))
