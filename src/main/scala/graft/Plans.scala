@@ -204,7 +204,12 @@ object Plans {
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+      // the same session defaults and extensions as Bench and Verify, so
+      // PLANS.md shows the plans those runs execute
+      .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of flagship queries\n\n")

@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev tool (r15 optimization round): per-query job/stage/task accounting.
@@ -13,8 +13,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * `taskTime / (wall * cores)` — a low fraction means the query's wall time
   * is scheduling gaps (sequential actions, tiny stages), not compute, which
   * is what the guide §1 "empirical" pass needs to separate before touching
-  * any operator. Listener counters are drained via waitUntilEmpty-ish sleep
-  * (listener bus is async); numbers are per measured run.
+  * any operator. The listener bus is async, so it is drained
+  * (`GraftPlanBridge.drainListeners`) before the counters are reset and
+  * read; numbers are per measured run.
   */
 object ProfileSome {
   def main(args: Array[String]): Unit = {
@@ -78,9 +79,10 @@ object ProfileSome {
       try {
         run() // warm
         // drain listener bus, then measure one run
-        Thread.sleep(300); reset()
+        GraftPlanBridge.drainListeners(spark.sparkContext); reset()
         val wall = run()
-        Thread.sleep(300) // let the bus drain before reading counters
+        // deliver every event of the run before reading counters
+        GraftPlanBridge.drainListeners(spark.sparkContext)
         val cores = cpus.toInt
         val util = taskMs.get() / 1000.0 / (wall * cores)
         println(f"PROFILE $name wall=$wall%.2fs jobs=${jobs.get()}%d " +

@@ -27,7 +27,12 @@ object CollapseIdempotentStringFns extends Rule[LogicalPlan] {
   * Spark's counterpart is `SparkSessionExtensions`: this class is usable as
   * `spark.sql.extensions=graft.plans.GraftExtensions` or
   * `builder.withExtensions(new GraftExtensions)` and injects
-  *   - the optimizer rule above (the seam the reference exposes), and
+  *   - the optimizer rule above (the seam the reference exposes),
+  *   - the native AS-OF join: its parser, resolution rule and planner
+  *     strategy (AsOfJoinPlan.scala, GraftSqlParser.scala),
+  *   - [[SmallSortSinglePartition]], a query-stage preparation rule that
+  *     gives a global sort over a small input a one-partition range
+  *     exchange, so it runs no sampling job, and
   *   - `graft_dot`, `graft_bands`, `graft_cdc_chunks`, and the
   *     `graft_bloom_agg` / `graft_bloom_contains` pair as session-wide SQL
   *     functions (the
@@ -46,6 +51,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // resolution rule binds key/time names per side.
     ext.injectParser((_, delegate) => new GraftSqlParser(delegate))
     ext.injectResolutionRule(_ => ResolveAsOfJoin)
+    // physical seam: AQE runs it after EnsureRequirements on the initial
+    // plan and on every re-plan
+    ext.injectQueryStagePrepRule(_ => SmallSortSinglePartition)
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[graft.functions.DotProduct].getName,

@@ -129,18 +129,19 @@ object GraphOps {
     // Debug-only job counter proving the one-action-per-round claim below:
     // GRAFT_CC_DEBUG prints the job-start delta per round (listener bus is
     // async, so a boundary job can land a line late, but steady-state
-    // rounds print jobs=1).
+    // rounds print jobs=1). It is removed once the loop ends.
     val jobCount = new java.util.concurrent.atomic.AtomicInteger
-    if (debug)
-      edges.sparkSession.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobCount.incrementAndGet(); ()
-          }
-        })
+    val sc = edges.sparkSession.sparkContext
+    val counter = Option.when(debug)(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobCount.incrementAndGet(); ()
+        }
+      })
+    counter.foreach(sc.addSparkListener)
     var changed = 1L; var iters = 0
-    while (changed > 0 && iters < MaxRounds) {
+    try while (changed > 0 && iters < MaxRounds) {
       // ONE action per round: the convergence count rides the checkpoint
       // job as an observed metric (CollectMetrics accumulates per task —
       // zero extra jobs, zero extra shuffles) instead of r6/r7's separate
@@ -215,7 +216,7 @@ object GraphOps {
       if (debug)
         System.err.println(s"[cc] round $iters changed=$changed " +
           s"jobs=${jobCount.get() - jobsBefore}")
-    }
+    } finally counter.foreach(sc.removeSparkListener)
     // The 30-round cap bounds pathological chains; hitting it means the
     // returned labels are NOT a converged fixpoint — surface that loudly
     // instead of silently emitting wrong cluster ids (callers' oracles

@@ -807,15 +807,11 @@ object TextOps {
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .take(1).headOption
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      var k = 1
-      var best = argmax(vocab)
-      while (best.isDefined) {
-        val (ba, bb, bc) = best.get
-        merged += ((k, ba, bb, bc))
-        // greedy left-to-right merge of (ba, bb): one pass over syms.
-        // acc = (res: rewritten prefix, skip: next symbol already
-        // consumed by the merge just emitted). get() is 0-based and NULL
-        // past the end (safe under ANSI, unlike element_at).
+      // greedy left-to-right merge of (a, b): one pass over syms.
+      // acc = (res: rewritten prefix, skip: next symbol already consumed
+      // by the merge just emitted). get() is 0-based and NULL past the
+      // end (safe under ANSI, unlike element_at).
+      def mergePair(v: DataFrame, ba: String, bb: String): DataFrame = {
         val newSyms = aggregate(
           sequence(lit(1), size(col("syms"))),
           struct(array().cast("array<string>").as("res"),
@@ -832,10 +828,20 @@ object TextOps {
                 lit(false).as("skip")))
           },
           acc => acc("res"))
-        vocab = vocab.select(col("w"), col("freq"), newSyms.as("syms"))
-          .localCheckpoint()
+        v.select(col("w"), col("freq"), newSyms.as("syms"))
+      }
+      var k = 1
+      var best = argmax(vocab)
+      while (best.isDefined) {
+        val (ba, bb, bc) = best.get
+        merged += ((k, ba, bb, bc))
         k += 1
-        best = if (k <= K) argmax(vocab) else None
+        // the next vocab is read only by the next round's argmax, so
+        // after round K it is neither built nor pinned
+        best = if (k > K) None else {
+          vocab = mergePair(vocab, ba, bb).localCheckpoint()
+          argmax(vocab)
+        }
       }
       import s.implicits._
       merged.result()
