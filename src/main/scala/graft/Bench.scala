@@ -43,8 +43,9 @@ import org.apache.spark.sql.functions._
   * [[detailPath]] (default `target/bench_detail.jsonl`, override via
   * SPARK_GRAFT_BENCH_DETAIL). Committing that file per round
   * (`BENCH_DETAIL_r{N}.jsonl`) makes the round-over-round ratio gate
-  * mechanical: `tools/bench_compare.py old.jsonl new.jsonl` prints every
-  * query whose ratio moved >1.5x.
+  * mechanical: `sbt "runMain graft.BenchCompare old.jsonl new.jsonl"`
+  * ([[BenchCompare]]) prints every query whose ratio regressed past its
+  * threshold and exits 1 if any did.
   */
 object Bench {
 

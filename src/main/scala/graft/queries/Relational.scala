@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.ld
+import graft.engine.Sessions
 
 /** Core relational operator inventory — SURVEY.md §2 re-expressed Spark-first.
   *
@@ -706,17 +707,15 @@ object Relational {
     // doesn't match the rule. The aggregate itself needs no rescue either
     // way: partial aggregation shrinks every task to ≤3 rows pre-shuffle.
     "q116_skew_aqe_join" -> ((s, d) => {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      ss.conf.set("spark.sql.shuffle.partitions", "32")
-      ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      ss.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      ss.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      ss.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      ss.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-      ss.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      ss.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB")
+      val ss = Sessions.child(s,
+        "spark.sql.shuffle.partitions" -> "32",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB")
       val l = ld(ss, d, "lineitem")
       // per-invocation unique scratch path (concurrent builds in one
       // session can never clobber each other's dim mid-read — the q110
@@ -751,12 +750,11 @@ object Relational {
     // when the bloom filter earns its keep. PlanSpec pins
     // bloom_filter_agg + might_contain in the plan.
     "q99_runtime_filter_join" -> ((s, d) => {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      ss.conf.set("spark.sql.shuffle.partitions", "32")
-      ss.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val ss = Sessions.child(s,
+        "spark.sql.shuffle.partitions" -> "32",
+        ("spark.sql.optimizer.runtime.bloomFilter." +
+          "applicationSideScanSizeThreshold") -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
       val o = ld(ss, d, "orders").filter(col("o_totalprice") > 490000)
       val l = ld(ss, d, "lineitem")
       l.join(o, l("l_orderkey") === o("o_orderkey"))

@@ -105,20 +105,4 @@ class StreamingResumeSpec extends AnyFunSuite with SparkFixture {
       }
     }
   }
-
-  test("spark.graft.streaming.stateStore: 'hdfs' produces the identical " +
-    "result as the rocksdb default, and a bogus value fails loudly") {
-    val d = "/root/testdata/sf0.001"
-    val q = graft.SparkEntry.queries("q74_stream_hourly")
-    val want = q(spark, d).collect().map(_.toString).sorted // rocksdb default
-    spark.conf.set("spark.graft.streaming.stateStore", "hdfs")
-    try {
-      val got = q(spark, d).collect().map(_.toString).sorted
-      assert(got.sameElements(want),
-        "hdfs-provider run must be row-identical to the rocksdb default")
-      spark.conf.set("spark.graft.streaming.stateStore", "hbase")
-      val err = intercept[IllegalArgumentException] { q(spark, d).collect() }
-      assert(err.getMessage.contains("spark.graft.streaming.stateStore"))
-    } finally spark.conf.unset("spark.graft.streaming.stateStore")
-  }
 }
