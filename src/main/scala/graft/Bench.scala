@@ -184,6 +184,19 @@ object Bench {
         new java.io.FileWriter(p, /*append=*/ false), /*autoFlush=*/ true))
     def emit(line: String): Unit =
       { println(line); detail.println(line); mirror.foreach(_.println(line)) }
+    // One line per declared-artifact build (graft.engine.Artifacts), named
+    // after the query whose excluded warm pass built it: the one-time cost
+    // that the measured medians leave out on purpose.
+    val artifactLog = new java.io.PrintWriter(new java.io.FileWriter(
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+        .resolve("bench_artifacts.jsonl").toFile, /*append=*/ false), true)
+    val logged = scala.collection.mutable.Map.empty[String, graft.engine.Artifacts.Build]
+    def logBuilds(query: String): Unit =
+      graft.engine.Artifacts.builds(spark).values.toSeq.sortBy(_.key)
+        .filterNot(b => logged.get(b.key).exists(_ eq b)).foreach { b =>
+          logged(b.key) = b
+          artifactLog.println(s"""{"artifact":"${b.key}","query":"$query","build_ms":${"%.1f".formatLocal(java.util.Locale.ROOT, b.ms)},"pinned_rdds":${b.pinnedRdds},"pinned_bytes":${b.pinnedBytes}}""")
+        }
     // Meta header: records the run's scale factor so committedDetail's
     // sf guard (and the BenchRegressionSpec live gate) can refuse to
     // compare ratios across different scales. Ignored by every line
@@ -240,6 +253,7 @@ object Bench {
         }
       }
       val warm = run() // excluded warm-up
+      logBuilds(name)
       val times: Seq[Option[Double]] = (1 to iters).map(_ => run())
       val ok = times.flatten
       // BENCH HYGIENE (r12): session-lifetime localCheckpoint pins (the
@@ -366,6 +380,7 @@ object Bench {
     emit(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${good.size},"cal":$calJson,"failed":${names(failed)},"flaky":${names(flaky)},$suspectJson,"slowest":$slowest,"slowest_ratio":$slowestRatio}""")
     detail.close()
     mirror.foreach(_.close())
+    artifactLog.close()
     spark.stop()
   }
 }

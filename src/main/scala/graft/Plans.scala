@@ -204,7 +204,8 @@ object Plans {
   /** A formatted explain with its run-specific numbers in one stable form,
     * so regenerating PLANS.md changes only the plans that changed:
     * expression ids (`l_orderkey#11L`) and physical plan ids (`plan_id=`,
-    * a subquery's `[id=#`) are renumbered per plan in order of first appearance; RDD ids, checkpoint
+    * a subquery's `[id=#`) and the counter suffixes of lambda variables
+    * (`lambda x_41`) are renumbered per plan in order of first appearance; RDD ids, checkpoint
     * call-site line numbers and scratch directories' random suffixes become
     * `N`. Node names, and so PlanDriftSpec's header-tree shapes, are kept. */
   private[graft] def normalize(explain: String): String = {
@@ -213,8 +214,8 @@ object Plans {
       re.replaceAllIn(s, m =>
         m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1))
     }
-    val stable = renumber(
-      renumber(explain, """(?<=[\w)\]])(#)(\d+)""".r), """(plan_id=|\[id=#)(\d+)""".r)
+    val stable = Seq("""(plan_id=|\[id=#)(\d+)""".r, """(lambda [A-Za-z]\w*?_)(\d+)(?=#)""".r)
+      .foldLeft(renumber(explain, """(?<=[\w)\]])(#)(\d+)""".r))(renumber)
     Seq("""(RDD\[)\d+""", """( at \w+\.scala:)\d+""",
       """(graft_\w*?_)\d{6,}(?=/)""")
       .foldLeft(stable)((t, re) => t.replaceAll(re, "$1N"))

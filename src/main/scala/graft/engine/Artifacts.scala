@@ -34,17 +34,29 @@ import org.apache.spark.sql.SparkSession
   *     that is not a declared artifact).
   *   - The measured window is unaffected: each query's EXCLUDED warm-up
   *     pass triggers the one-time build, so measured medians price the
-  *     serving path only.
+  *     serving path only. That hides the build's cost, so every build is
+  *     timed: [[builds]] reports per key its wall time, the RDDs it pinned
+  *     and their stored bytes, and `Bench` writes one line per artifact to
+  *     `target/bench_artifacts.jsonl`.
   *
   * Scope discipline: only derivations that are genuinely durable build
-  * outputs in production may use this (PQ codebooks + codes + probe LUT).
-  * Per-query scratch keeps using localCheckpoint directly and is torn
-  * down between queries.
+  * outputs in production may use this: the vector-index codebooks, codes,
+  * probe LUTs and inverted lists of `VectorOps`, each trained by the
+  * compiled `graft.functions.Lloyd` kernel in a few map-side passes over
+  * a corpus that [[scoped]] holds for the build only. Per-query scratch
+  * keeps using localCheckpoint directly and is torn down between queries.
   */
 object Artifacts {
 
+  /** What one [[memo]] build cost: its wall time, and the RDDs (and
+    * their stored bytes) it pinned. */
+  final case class Build(key: String, ms: Double, pinnedRdds: Int,
+      pinnedBytes: Long)
+
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private val built =
+    new java.util.concurrent.ConcurrentHashMap[String, Build]()
   private val pinned: java.util.Set[Integer] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
 
@@ -63,6 +75,7 @@ object Artifacts {
     if (boundApp != app) this.synchronized {
       if (boundApp != app) {
         cache.clear()
+        built.clear()
         pinned.clear()
         boundApp = app
       }
@@ -100,18 +113,30 @@ object Artifacts {
     this.synchronized {
       val again = cache.get(key)
       if (again != null) return again.asInstanceOf[T]
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val t0 = System.nanoTime()
       val v = build
-      val after = spark.sparkContext.getPersistentRDDs.keySet
-      (after -- before).foreach(id => pinned.add(id))
+      val ms = (System.nanoTime() - t0) / 1e6
+      val ids = sc.getPersistentRDDs.keySet -- before
+      ids.foreach(id => pinned.add(id))
+      val bytes = sc.getRDDStorageInfo.filter(i => ids.contains(i.id))
+        .map(i => i.memSize + i.diskSize).sum
+      built.put(key, Build(key, ms, ids.size, bytes))
       cache.put(key, v)
       v
     }
   }
 
+  /** The build record of every live artifact, by key. */
+  def builds(spark: SparkSession): Map[String, Build] = {
+    rebind(spark)
+    built.asScala.toMap
+  }
+
   /** Pin `df` for the duration of `use` ONLY — for training-time
-    * intermediates inside a [[memo]] build (e.g. q185's corpus-sized
-    * residual frame) that several build stages read but that are NOT part
+    * intermediates inside a [[memo]] build (e.g. the corpus a quantizer
+    * trains on) that several build passes read but that are NOT part
     * of the durable artifact. The blocks are dropped before the build
     * returns, so the memo's before/after diff never pins them. `use` must
     * fully materialize its outputs (eager localCheckpoints) before
@@ -144,5 +169,6 @@ object Artifacts {
       .values.foreach(_.unpersist(blocking = true))
     pinned.clear()
     cache.clear()
+    built.clear()
   }
 }

@@ -177,9 +177,8 @@ case class AssertArrayElementsNotNull(child: Expression)
     var i = 0
     val n = x.numElements()
     while (i < n) {
-      if (x.isNullAt(i)) throw new IllegalArgumentException(
-        s"graft_elements_not_null: null element at index $i — corrupt " +
-          "vector; clean or drop the row upstream")
+      if (x.isNullAt(i))
+        throw new IllegalArgumentException(VectorExprs.nullElementMessage(i))
       i += 1
     }
     x
@@ -212,6 +211,12 @@ object VectorExprs {
 
   private def toCol(e: Expression): Column =
     ColumnBridge.toColumn(e)
+
+  /** The corrupt-vector error of [[elementsNotNull]] (its generated code
+    * spells the same text); `graft.functions.Lloyd` raises it too. */
+  private[graft] def nullElementMessage(i: Int): String =
+    s"graft_elements_not_null: null element at index $i — corrupt " +
+      "vector; clean or drop the row upstream"
 
   /** Validate-and-narrow seam: asserts every element non-null (throws on
     * corrupt vectors) and types the result containsNull = false so the

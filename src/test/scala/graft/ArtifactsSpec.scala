@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -89,5 +91,35 @@ class ArtifactsSpec extends AnyFunSuite with SparkFixture {
     assert(rebuiltIds.nonEmpty && rebuiltIds.subsetOf(Artifacts.pinnedRddIds),
       "rebuild after clearAll must re-pin its blocks")
     assert(rebuilt.count() == 7)
+  }
+
+  private val sf = Paths.get("qbench/data/sf0.001").toAbsolutePath.toString
+
+  test("q119's build pins exactly its 3 artifact frames and records its " +
+    "cost; no corpus scratch block survives it") {
+    Artifacts.clearAll(spark)
+    val before = persistedIds
+    SparkEntry.queries("q119_ann_ivfpq")(spark, sf).collect()
+    val b = Artifacts.builds(spark)(s"pq-codes-lut:$sf")
+    assert(b.pinnedRdds == 3, s"codes, lut and c1 only: $b")
+    assert(b.pinnedBytes > 0 && b.ms > 0, s"build record: $b")
+    assert(Artifacts.pinnedRddIds(spark).size == 3)
+    assert(persistedIds -- before == Artifacts.pinnedRddIds(spark),
+      "every block left after the build must be an artifact pin")
+  }
+
+  test("q125 then q185 in one session trains the coarse quantizer once: " +
+    "residual-pq reuses ivf-coarse") {
+    Artifacts.clearAll(spark)
+    SparkEntry.queries("q125_ann_ivf_pq")(spark, sf).collect()
+    val coarse = Artifacts.builds(spark)(s"ivf-coarse:$sf")
+    SparkEntry.queries("q185_residual_pq")(spark, sf).collect()
+    val after = Artifacts.builds(spark)
+    assert(after.keySet ==
+      Set(s"ivf-coarse:$sf", s"pq-codes-lut:$sf", s"residual-pq:$sf"))
+    assert(after(s"ivf-coarse:$sf") eq coarse, "ivf-coarse must not rebuild")
+    assert(after(s"residual-pq:$sf").pinnedRdds == 2,
+      "residual-pq pins rcc1 and rcodes only, no second coarse quantizer")
+    Artifacts.clearAll(spark)
   }
 }
