@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.Harness.{calibrate, median, teardown}
 
 /** Bench harness: every SparkEntry query against SPARK_GRAFT_SF_DIR, timed
   * end-to-end through a `noop` sink so the FULL plan executes (a bare
@@ -48,21 +47,6 @@ import org.apache.spark.sql.functions._
   * threshold and exits 1 if any did.
   */
 object Bench {
-
-  /** Fixed calibration workload: deterministic, in-memory, plan-stable —
-    * codegen'd hash + modulo, one 1000-key shuffle, keyed agg. ~0.2-0.4 s
-    * at 32 threads; exercises the same resources (CPU, shuffle exchange,
-    * task scheduling) whose contention inflates the inventory queries. */
-  private def calibrate(spark: SparkSession): Double = {
-    val t0 = System.nanoTime()
-    spark.range(0L, 8000000L, 1L, 32)
-      .select((col("id") % 1000).as("k"), xxhash64(col("id")).as("h"))
-      // avg, not sum: summing 8M xxhash64 longs overflows under ANSI mode
-      .groupBy("k").agg(avg("h").as("a"), max("h").as("m"),
-        count(lit(1)).as("n"))
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
 
   private val CalEvery = 8 // one calibration sample per 8 queries (~+2 % runtime)
 
@@ -145,19 +129,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus.toString
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Declared session default: q309's SPJ demo needs it live at
-      // physical-planning time (the caller's action), so it cannot be
-      // scoped per-query; default-on makes it variance-free across queries.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Per-query detail sink: stdout tail truncation loses the ratio lines
     // (r8 kept 1 of 123), so mirror every JSON line into a committed file.
@@ -214,11 +188,6 @@ object Bench {
       }
     }
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     // Calibration baseline: warm-up + median-of-3 before the first query.
     calibrate(spark)
     val calSamples = scala.collection.mutable.ArrayBuffer(
@@ -241,58 +210,15 @@ object Bench {
         sinceCal = 0
       }
       sinceCal += 1
-      // A run that throws yields None — never a (near-zero) elapsed time.
-      def run(): Option[Double] = {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          None
-        }
-      }
+      def run(): Option[Double] =
+        Harness.timedRun(s"[bench] $name")(fn(spark, sfDir))
       val warm = run() // excluded warm-up
       logBuilds(name)
       val times: Seq[Option[Double]] = (1 to iters).map(_ => run())
       val ok = times.flatten
-      // BENCH HYGIENE (r12): session-lifetime localCheckpoint pins (the
-      // q134/q117 memoized derivations) plus per-query checkpoint blocks
-      // accumulate across a 285-query session — r11's driver bench showed
-      // tail queries (q257, q164) inflated ~2× vs their isolated medians
-      // purely from held RDD blocks. Drop the memo maps FIRST (so no live
-      // DataFrame still references an unpersisted checkpoint), then clear
-      // the SQL cache and unpersist every tracked RDD. The next query's
-      // excluded warm-up pass re-derives whatever it needs, so measured
-      // medians keep their steady-state meaning.
-      // blocking = true: async cleanup was observed landing on the NEXT
-      // query's measured runs (r12 local: q258 runs [0.6, 2.0, 2.4]
-      // right after q257's checkpoint-heavy teardown); paying the
-      // removal between queries keeps it out of every median.
-      // DECLARED ARTIFACTS (r13): blocks pinned by graft.engine.Artifacts
-      // (PQ codebooks/codes — durable build-time index tables in
-      // production) survive the teardown; everything else is scratch and
-      // gets dropped. See Artifacts' scaladoc + BASELINE.md for the
-      // declaration and the r12 driver evidence that per-run re-training
-      // both misprices the PQ family and starves its neighbors.
-      def teardown(): Unit = {
-        queries.Relational.clearShared()
-        queries.PipelineOps.clearShared()
-        spark.sharedState.cacheManager.clearCache()
-        val artifactIds = graft.engine.Artifacts.pinnedRddIds(spark)
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => artifactIds.contains(id) }
-          .values.foreach(_.unpersist(blocking = true))
-        // Full GC between queries: the r12 driver anomaly (q11 at 7.66 s /
-        // 16.7× right after the checkpoint-heavy q119, runs still
-        // ESCALATING 4.6→8.3 s, vs 1.12 s isolated) is collection debt from
-        // the predecessor's freed blocks landing inside the successor's
-        // measured window. Paying it here, outside every window, costs
-        // ~0.1 s/query and makes medians attributable to the query's own
-        // plan.
-        System.gc()
-      }
-      teardown()
+      // Between-query hygiene (memos, SQL cache, non-artifact RDD blocks,
+      // full GC): see Harness.teardown for why each step is there.
+      teardown(spark)
       val runs = times.map(_.map(f3).getOrElse("null")).mkString("[", ",", "]")
       val cal = calSamples.last
       val med = if (ok.nonEmpty) Some(median(ok)) else None
@@ -316,7 +242,7 @@ object Bench {
       // recheck's own scratch never lands in the next query's window.
       val (recheckCal, recheckSec) =
         if (suspect) {
-          // One EXCLUDED warm pass first (r15, ADVICE): teardown() just
+          // One EXCLUDED warm pass first (r15, ADVICE): teardown just
           // cleared memos/cached scratch, and the measured medians
           // exclude re-derivation via their own warm pass — a cold
           // recheck is biased high for memo-heavy queries, deflating
@@ -326,7 +252,7 @@ object Bench {
           run()
           val c = calibrate(spark)
           val r = run()
-          teardown()
+          teardown(spark)
           (Some(c), r)
         } else (None, None)
       val sec = med.map(f3).getOrElse("null")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.engine.GraftDB
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -11,9 +10,7 @@ import java.nio.file.{Files, Paths}
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val dir = Files.createDirectories(Paths.get("target", "demo-data"))

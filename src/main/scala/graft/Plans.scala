@@ -223,15 +223,9 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the same session defaults and extensions as Bench and Verify, so
-      // PLANS.md shows the plans those runs execute
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    // The test fixture's session (Harness.session(4)), so PLANS.md is
+    // derived from the same session PlanDriftSpec compares it against.
+    val spark = Harness.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of flagship queries\n\n")

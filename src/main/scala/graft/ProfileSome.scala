@@ -1,12 +1,12 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev tool (r15 optimization round): per-query job/stage/task accounting.
   *
   * `sbt "runMain graft.ProfileSome q131_pagerank ..."` runs each named query
-  * once warm + once measured (same session setup as Bench) and prints, for
+  * once warm + once measured (Bench's session and teardown) and prints, for
   * the measured run: wall seconds, #jobs, #stages, #tasks, summed task
   * wall-clock, summed executor run/CPU time, and shuffle bytes
   * read/written. The interesting derived number is
@@ -20,15 +20,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 object ProfileSome {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach(n => Tables.ld(spark, sfDir, n).count())
 
@@ -83,8 +75,7 @@ object ProfileSome {
         val wall = run()
         // deliver every event of the run before reading counters
         GraftPlanBridge.drainListeners(spark.sparkContext)
-        val cores = cpus.toInt
-        val util = taskMs.get() / 1000.0 / (wall * cores)
+        val util = taskMs.get() / 1000.0 / (wall * Harness.cpus)
         println(f"PROFILE $name wall=$wall%.2fs jobs=${jobs.get()}%d " +
           f"stages=${stages.get()}%d tasks=${tasks.get()}%d " +
           f"taskTime=${taskMs.get() / 1000.0}%.2fs " +
@@ -96,14 +87,7 @@ object ProfileSome {
       } catch { case e: Throwable =>
         println(s"PROFILE $name FAILED: ${e.getMessage}")
       }
-      // Same hygiene as Bench between queries
-      queries.Relational.clearShared()
-      queries.PipelineOps.clearShared()
-      spark.sharedState.cacheManager.clearCache()
-      val artifactIds = graft.engine.Artifacts.pinnedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => artifactIds.contains(id) }
-        .values.foreach(_.unpersist(blocking = true))
+      Harness.teardown(spark)
     }
     spark.stop()
   }

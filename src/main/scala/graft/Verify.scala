@@ -1,23 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * `runMain graft.Verify <sfDir> <outDir> [name ...]`: with names, only
+  * those queries are dumped (`tools/check.py <outDir> <sfDir> <names>`
+  * checks just them); with none, every query runs. `oracle_sql.json`
+  * always covers the whole inventory. Each query's wall seconds land in
+  * `_timings.json`, so the slow queries of a long check are named.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Declared session default: q309's SPJ demo needs it live at
-      // physical-planning time (the caller's action), so it cannot be
-      // scoped per-query; default-on makes it variance-free across queries.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val sfDir = args(0); val outDir = args(1); val names = args.drop(2)
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Failures are first-class: r10's fixture regression silently dropped 22
@@ -26,28 +21,47 @@ object Verify {
     // query lands in _failed.json (empty object on a clean run) so breakage
     // can never again masquerade as a coverage choice.
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+    val timings = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val todo = if (names.isEmpty) SparkEntry.queries.keys.toSeq else names.toSeq
+    todo.foreach { name =>
+      SparkEntry.queries.get(name) match {
+        case None =>
+          System.err.println(s"[verify] $name failed: unknown query")
+          failed(name) = "unknown query"
+        case Some(fn) =>
+          val t0 = System.nanoTime()
+          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+          }
+          timings(name) = "%.3f".formatLocal(java.util.Locale.ROOT,
+            (System.nanoTime() - t0) / 1e9)
+          // Same between-query hygiene as Bench: a query's checkpoints and
+          // memos must not crowd the next one (a long sf0.1 run otherwise
+          // accumulates every query's pinned blocks).
+          Harness.teardown(spark)
       }
     }
-    writeFailedJson(outDir, failed)
-    writeOracleJson(outDir)
+    writeJson(s"$outDir/_failed.json", failed.map { case (k, v) => k -> jq(v) })
+    writeJson(s"$outDir/_timings.json", timings)
+    writeJson(s"$outDir/oracle_sql.json",
+      SparkEntry.oracleSql.map { case (k, v) => k -> jq(v) })
     spark.stop()
   }
 
-  /** Per-failure record (name → exception message); `{}` on a clean run. */
-  private[graft] def writeFailedJson(
-      outDir: String, failed: collection.Map[String, String]): Unit = {
-    val json = failed
-      .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_failed.json"), json)
+  /** A flat JSON object of already-encoded values, keys escaped by [[jq]]. */
+  private def writeJson(path: String,
+      entries: collection.Map[String, String]): Unit = {
+    val json = entries
+      .map { case (k, v) => s"${jq(k)}: $v" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(path), json)
   }
 
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20). */
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness. */
   private def jq(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -57,14 +71,4 @@ object Verify {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
-
-  /** Dump SparkEntry.oracleSql as JSON (shared with VerifyOne).
-    * JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness. */
-  private[graft] def writeOracleJson(outDir: String): Unit = {
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-  }
 }

@@ -103,7 +103,8 @@ object GraphOps {
     * which stays inside the component, so it accelerates without changing
     * the fixpoint. The q101/q102 oracles (exact recursive-CTE closures)
     * pin this end-to-end. */
-  private[graft] def connectedComponents(edges: DataFrame): DataFrame = {
+  private[graft] def connectedComponents(edges: DataFrame,
+      maxRounds: Int = MaxRounds): DataFrame = {
     // Size the edge layout from the data, not the session default: near-dup
     // edges are a tiny corpus fraction, and shuffle-partition-count
     // near-empty partitions would pay that many task launches per join per
@@ -141,7 +142,7 @@ object GraphOps {
       })
     counter.foreach(sc.addSparkListener)
     var changed = 1L; var iters = 0
-    try while (changed > 0 && iters < MaxRounds) {
+    try while (changed > 0 && iters < maxRounds) {
       // ONE action per round: the convergence count rides the checkpoint
       // job as an observed metric (CollectMetrics accumulates per task —
       // zero extra jobs, zero extra shuffles) instead of r6/r7's separate
@@ -217,14 +218,13 @@ object GraphOps {
         System.err.println(s"[cc] round $iters changed=$changed " +
           s"jobs=${jobCount.get() - jobsBefore}")
     } finally counter.foreach(sc.removeSparkListener)
-    // The 30-round cap bounds pathological chains; hitting it means the
-    // returned labels are NOT a converged fixpoint — surface that loudly
-    // instead of silently emitting wrong cluster ids (callers' oracles
-    // would catch it, but a production user has no oracle).
-    if (changed > 0)
-      System.err.println(s"[graft.cc] WARNING: hit the $MaxRounds-round " +
-        s"cap with $changed labels still changing — labels are not " +
-        "converged; component ids may be split")
+    // The round cap bounds pathological chains; hitting it means the
+    // labels are NOT a converged fixpoint — fail instead of emitting split
+    // component ids (callers' oracles would catch it, but a production
+    // user has no oracle).
+    if (changed > 0) throw new IllegalStateException(
+      s"connectedComponents: hit the $maxRounds-round cap with $changed " +
+        "labels still changing — the labels are not converged")
     labels
   }
 }

@@ -1893,10 +1893,10 @@ object Relational {
       // PLANNING — i.e. when the caller's ACTION runs, long after this
       // builder returns — so a try/finally restore here would silently
       // disable the SPJ elision being demonstrated. The flag is instead a
-      // declared session default in every graft session builder
-      // (Bench/Verify/VerifyOne/specs), making this set idempotent: no
-      // cross-query variance (r12 ADVICE), and any external session still
-      // gets the right plan.
+      // declared session default of graft.Harness.session, which builds
+      // every graft session (the mains and the specs), making this set
+      // idempotent: no cross-query variance (r12 ADVICE), and any external
+      // session still gets the right plan.
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       val nation = ld(s, d, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")

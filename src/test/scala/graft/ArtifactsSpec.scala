@@ -41,13 +41,16 @@ class ArtifactsSpec extends AnyFunSuite with SparkFixture {
     assert(created.subsetOf(Artifacts.pinnedRddIds),
       s"pinned ${Artifacts.pinnedRddIds} must cover built $created")
     // a NON-artifact checkpoint alongside it…
+    val beforeScratch = persistedIds
     val scratch = spark.range(50).localCheckpoint()
     assert(scratch.count() == 50)
-    // …the bench's between-query sweep drops scratch, keeps the artifact
-    val artifactIds = Artifacts.pinnedRddIds
-    spark.sparkContext.getPersistentRDDs
-      .filterNot { case (id, _) => artifactIds.contains(id) }
-      .values.foreach(_.unpersist(blocking = true))
+    val scratchIds = persistedIds -- beforeScratch
+    assert(scratchIds.nonEmpty, "the scratch checkpoint must persist blocks")
+    // …the between-query teardown of Bench and Verify drops scratch,
+    // keeps the artifact
+    Harness.teardown(spark)
+    assert((persistedIds & scratchIds).isEmpty,
+      "scratch blocks must not survive the teardown")
     assert((persistedIds & created) == created,
       "artifact blocks must survive the teardown sweep")
     assert(df.count() == 100, "artifact must stay readable after the sweep")

@@ -19,15 +19,27 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  // ids deliberately out of order so the min sits mid-chain and labels
+  // must flow BOTH directions across ~20 hops
+  private val chainIds = Seq(40L, 12, 33, 7, 25, 3, 18, 29, 5, 44, 21, 9,
+    36, 14, 2, 27, 48, 11, 31, 16, 42)
+
   test("long chain collapses to one component labelled by its min") {
-    // ids deliberately out of order so the min sits mid-chain and labels
-    // must flow BOTH directions across ~20 hops
-    val ids = Seq(40L, 12, 33, 7, 25, 3, 18, 29, 5, 44, 21, 9, 36, 14, 2,
-      27, 48, 11, 31, 16, 42)
-    val edges = ids.zip(ids.tail)
-    val got = cc(edges)
-    assert(got.keySet == ids.toSet)
+    val got = cc(chainIds.zip(chainIds.tail))
+    assert(got.keySet == chainIds.toSet)
     assert(got.values.toSet == Set(2L))
+  }
+
+  test("hitting the round cap unconverged fails loudly, naming cap and " +
+    "count") {
+    import spark.implicits._
+    val e = intercept[IllegalStateException] {
+      GraphOps.connectedComponents(
+        chainIds.zip(chainIds.tail).toDF("da", "db"), maxRounds = 1)
+    }
+    assert(e.getMessage.contains("1-round cap"), e.getMessage)
+    assert("""with \d+ labels still changing""".r
+      .findFirstIn(e.getMessage).isDefined, e.getMessage)
   }
 
   test("disjoint components get distinct min labels; singletons absent") {

@@ -14,14 +14,7 @@ class ExtensionsSpec extends AnyFunSuite {
     "optimizedPlan; injected graft_dot is SQL-callable") {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s = Harness.session(2)
     try {
       // parquet source (not a local relation) so ConvertToLocalRelation
       // can't erase the projection before our rule is observable
@@ -62,14 +55,7 @@ class ExtensionsSpec extends AnyFunSuite {
     "(equal-ts visible, no-match null, carry across left rows)") {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-asof-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s = Harness.session(2)
     try {
       import s.implicits._
       val left = Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 5L, "c"))
@@ -129,14 +115,7 @@ class ExtensionsSpec extends AnyFunSuite {
     "would call that ambiguous), and stock SQL still parses untouched") {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-parser-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s = Harness.session(2)
     try {
       import s.implicits._
       // both sides deliberately name the key "k" and the time "t"

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
-/** One session per suite; local[4] keeps test latency low. */
+/** One session per suite: the mains' session ([[Harness.session]]) at a
+  * fixed local[4], which keeps test latency low. The core count is a
+  * literal, not `SPARK_GRAFT_CPUS`, so plan assertions (and PLANS.md,
+  * which `Plans` derives from the same session) do not depend on the host. */
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-      // Declared session default: q309's SPJ demo needs it live at
-      // physical-planning time (the caller's action), so it cannot be
-      // scoped per-query; default-on makes it variance-free across queries.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
 
   override def afterAll(): Unit = {
     // Session is shared process-wide (getOrCreate); don't stop between
